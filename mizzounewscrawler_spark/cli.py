@@ -89,20 +89,27 @@ def _cmd_status(args) -> int:
             "summary": dict(snap.summary),
         }
     if t.articles.exists():
-        arts = t.articles.read()
-        out["status_counts"] = {
-            r["status"]: r["n"]
-            for r in arts.groupBy("status")
+        # one (host, status) aggregation, folded on the driver into both
+        # rollups: the result is hosts × statuses rows, not article-sized
+        status_counts: dict = {}
+        host_counts: dict = {}
+        for r in (
+            t.articles.read()
+            .groupBy("host", "status")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
-        }
+        ):
+            st, host, n = r["status"], r["host"], r["n"]
+            status_counts[st] = status_counts.get(st, 0) + n
+            host_counts[host] = host_counts.get(host, 0) + n
+        out["status_counts"] = status_counts
+        # n descending, then host ascending with nulls first (Spark's order)
         out["top_hosts"] = [
-            [r["host"], r["n"]]
-            for r in arts.groupBy("host")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.desc("n"), "host")
-            .limit(args.top)
-            .collect()
+            [h, n]
+            for h, n in sorted(
+                host_counts.items(),
+                key=lambda kv: (-kv[1], kv[0] is not None, kv[0] or ""),
+            )[: args.top]
         ]
     print(json.dumps(out, default=str))
     return 0
@@ -315,6 +322,8 @@ def _cmd_sql(args) -> int:
     import glob
     import os
 
+    from mizzounewscrawler_spark.lake import read_parquet
+
     spark = _spark("mnc-sql")
     if args.out:
         from mizzounewscrawler_spark.crawl import open_tables
@@ -328,7 +337,7 @@ def _cmd_sql(args) -> int:
     if args.data:
         for p in sorted(glob.glob(os.path.join(args.data, "*.parquet"))):
             stem = os.path.splitext(os.path.basename(p))[0]
-            spark.read.parquet(p).createOrReplaceTempView(stem)
+            read_parquet(spark, p).createOrReplaceTempView(stem)
     df = spark.sql(args.query)
     for row in df.limit(args.limit).collect():
         print(json.dumps(row.asDict(), default=str))
@@ -443,7 +452,10 @@ def _cmd_ml(args) -> int:
     latest-label window picks the newest version per article via
     plans.mlops.labels_view."""
     from mizzounewscrawler_spark.crawl import open_tables
-    from mizzounewscrawler_spark.operators.ml import classify_articles
+    from mizzounewscrawler_spark.operators.ml import (
+        MODEL_VERSION,
+        classify_articles,
+    )
     from mizzounewscrawler_spark.plans.mlops import (
         model_scores_from_labels,
         open_model_scores,
@@ -456,15 +468,18 @@ def _cmd_ml(args) -> int:
         & F.col("text").isNotNull()
     )
     labels = classify_articles(arts)
+    # each flag stamps on its own; unset ones keep the classifier's tags
     if args.model_version:
-        labels = labels.withColumn(
-            "model_version", F.lit(args.model_version)
-        ).withColumn("label_version", F.lit(args.label_version))
+        labels = labels.withColumn("model_version", F.lit(args.model_version))
+    if args.label_version is not None:
+        labels = labels.withColumn("label_version", F.lit(args.label_version))
     ms = open_model_scores(spark, args.out)
     rows = model_scores_from_labels(
         labels, wave=args.wave
     ).cache()
-    ms.append(rows.coalesce(4), {"model_version": args.model_version or ""})
+    ms.append(
+        rows.coalesce(4), {"model_version": args.model_version or MODEL_VERSION}
+    )
     counts = {
         r["label"]: r["n"]
         for r in rows.where(F.col("rank") == 1)
@@ -707,7 +722,7 @@ def build_parser() -> argparse.ArgumentParser:
     ml.add_argument("--out", required=True)
     ml.add_argument("--model-version", dest="model_version")
     ml.add_argument("--label-version", dest="label_version", type=int,
-                    default=1)
+                    help="label_version stamp (default: the classifier's)")
     ml.add_argument("--wave", type=int, default=0,
                     help="applied_wave stamp for the history rows")
     ml.set_defaults(fn=_cmd_ml)

@@ -105,10 +105,11 @@ class CrawlConfig:
     # sandbox scale the broadcast path avoids the candidate shuffle.
     bloom_sharded: bool = False
     # Disk-backed Bloom WRITER (requires bloom_sharded and the default
-    # "bloom" filter): the driver holds only the filter geometry — the
-    # bulk build writes each shard file from its executor task
-    # (dedup.build_bloom_to_dir) and per-wave increments are per-shard
-    # read-modify-writes against {out_dir}/bloom_shards
+    # "bloom" filter — run_crawl raises ValueError otherwise instead of
+    # silently building the in-RAM filter): the driver holds only the
+    # filter geometry — the bulk build writes each shard file from its
+    # executor task (dedup.build_bloom_to_dir) and per-wave increments are
+    # per-shard read-modify-writes against {out_dir}/bloom_shards
     # (dedup.DiskBloomWriter).  Removes the last multi-GB driver residency
     # at the 10^10 geometry (~12 GB filter → one ~12 MB shard at a time);
     # bit-identical shard files to the in-RAM writer.  Off by default: at
@@ -589,6 +590,14 @@ def run_crawl(
     downstream stage (frontier, host dims, waves, admission) for free.
     """
     cfg = config or CrawlConfig()
+    if cfg.bloom_disk_writer and (
+        not cfg.bloom_sharded or cfg.url_seen_filter == "cuckoo"
+    ):
+        # explicit-config contract: never fall back to the in-RAM filter
+        raise ValueError(
+            "config.bloom_disk_writer requires bloom_sharded=True and "
+            'url_seen_filter="bloom"'
+        )
     t = open_tables(spark, out_dir)
     if cfg.dataset_label is not None:
         if dataset_sources is None:

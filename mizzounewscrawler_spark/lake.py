@@ -14,6 +14,10 @@ runtime jar, so IceLite provides the same *semantics* on plain parquet:
   mid-commit leaves orphan data files but a consistent table;
 - reads resolve the latest (or an explicit) snapshot and load only its live
   data directories — time travel for free;
+- reads are planned from the manifest alone, as in Iceberg: the snapshot's
+  recorded ``schema_json`` types the data files and the delete-key files,
+  so opening a table launches no footer-reading (schema-inference) Spark
+  job.  Only a snapshot with no recorded schema falls back to inference;
 - ``append`` keeps prior versions live (Iceberg append), ``overwrite``
   replaces them (Iceberg overwrite);
 - ``merge`` is the merge-on-read commit (Iceberg v2 equality deletes):
@@ -77,6 +81,70 @@ def _dir_file_stats(d: str) -> list[dict[str, Any]]:
                 }
             )
     return stats
+
+
+def _schema(schema_json: str):
+    """The StructType a manifest recorded, or None for a schema-less one."""
+    if not schema_json:
+        return None
+    from pyspark.sql import types as T
+
+    return T.StructType.fromJson(json.loads(schema_json))
+
+
+def _read(spark: SparkSession, schema, paths: list[str]) -> DataFrame:
+    """Parquet reader typed by ``schema`` when known — planning then reads
+    no footers, so it launches no Spark job; ``None`` infers as before."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
+# (SparkContext id, path) -> (listing, inferred schema); see read_parquet
+_SCHEMA_MEMO: dict[tuple[int, str], tuple[tuple, Any]] = {}
+
+
+def _listing(path: str) -> tuple | None:
+    """(name, size, mtime_ns, inode) of every file under a local parquet
+    path, or None when the path is remote or missing (nothing to validate
+    against).  The inode catches an atomic same-size replace that lands
+    within one mtime tick."""
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+    elif "://" in path:
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not os.path.isdir(path):
+        return ((path, st.st_size, st.st_mtime_ns, st.st_ino),)
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for name in sorted(files):
+            p = os.path.join(root, name)
+            fst = os.stat(p)
+            out.append((p, fst.st_size, fst.st_mtime_ns, fst.st_ino))
+    return tuple(out)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for a plain (non-lake) parquet path,
+    with the Spark-inferred schema memoized per (SparkContext, path): a
+    repeat read of an unchanged path is planned with no footer-reading job.
+    A memo entry holds only while the path's file listing (see
+    :func:`_listing`) is unchanged, so a rewritten path is inferred again.
+    A path that cannot be listed locally is read plainly."""
+    listing = _listing(path)
+    if listing is None:
+        return spark.read.parquet(path)
+    key = (id(spark.sparkContext), path)
+    hit = _SCHEMA_MEMO.get(key)
+    if hit is not None and hit[0] == listing:
+        return _read(spark, hit[1], [path])
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[key] = (listing, df.schema)
+    return df
 
 
 @dataclass
@@ -475,7 +543,10 @@ class LakeTable:
         keep_n = max(max_live // 2, 1)
         fold = [v for _, v in sized[keep_n:]]
         fold_bytes = sum(b for b, v in sized[keep_n:])
-        df = self.spark.read.parquet(*[self._data_dir(v) for v in fold])
+        df = _read(
+            self.spark, _schema(snap.schema_json),
+            [self._data_dir(v) for v in fold],
+        )
         nfiles = max(1, min(fold_bytes // target_file_bytes + 1, 64))
         staged = self.stage(df.coalesce(int(nfiles)))
         staged["replace_versions"] = fold
@@ -554,7 +625,7 @@ class LakeTable:
             "snapshot_id": snap.version if snap else None,
             "table_path": self.path,
             "files": files,
-            "row_count": self.spark.read.parquet(dest_dir).count(),
+            "row_count": _dir_rows(dest_dir),
         }
         tmp = os.path.join(dest_dir, ".manifest.json.tmp")
         final = os.path.join(dest_dir, "manifest.json")
@@ -611,7 +682,10 @@ class LakeTable:
         producing plan."""
         if not staged["has_data"]:
             return None
-        return self.spark.read.parquet(self._data_dir(staged["version"]))
+        return _read(
+            self.spark, _schema(staged["schema_json"]),
+            [self._data_dir(staged["version"])],
+        )
 
     def staged_column(self, staged: dict[str, Any], column: str):
         """One column of a stage()-written data dir as a numpy array, read
@@ -643,28 +717,35 @@ class LakeTable:
         if not snaps:
             raise FileNotFoundError(f"LakeTable at {self.path} has no snapshots")
         snap = snaps[-1] if snapshot_id is None else self._cache[snapshot_id]
+        schema = _schema(snap.schema_json)
         if not snap.live_versions:
             # e.g. first-ever commit was merge(appends=None): no data dirs to
             # scan — return an empty frame from the recorded schema instead
             # of an unhelpful zero-path parquet error (ADVICE r2)
-            if snap.schema_json:
-                from pyspark.sql import types as T
-
-                schema = T.StructType.fromJson(json.loads(snap.schema_json))
+            if schema is not None:
                 return self.spark.createDataFrame([], schema)
             raise ValueError(
                 f"LakeTable at {self.path} snapshot v{snap.version} has no "
                 "live data versions and no recorded schema"
             )
-        dirs = [self._data_dir(v) for v in snap.live_versions]
-        df = self.spark.read.parquet(*dirs)
+        # planned from the manifest: the recorded schema types every data
+        # file (inference would read one file's footer in a Spark job)
+        df = _read(
+            self.spark, schema, [self._data_dir(v) for v in snap.live_versions]
+        )
         if snap.delete_versions:
             from pyspark.sql import functions as F
+            from pyspark.sql import types as T
 
-            dk = self.spark.read.parquet(
-                *[self._delete_dir(v) for v in snap.delete_versions]
+            key_col = snap.delete_key_col
+            dk = _read(
+                self.spark,
+                T.StructType([schema[key_col]])
+                if schema is not None and key_col in schema.names
+                else None,
+                [self._delete_dir(v) for v in snap.delete_versions],
             )
-            df = df.join(F.broadcast(dk), on=snap.delete_key_col, how="left_anti")
+            df = df.join(F.broadcast(dk), on=key_col, how="left_anti")
         return df
 
 

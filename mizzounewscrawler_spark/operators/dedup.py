@@ -29,6 +29,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 from dataclasses import dataclass
 from functools import lru_cache
 
@@ -304,7 +305,14 @@ def build_bloom_to_dir(
         n = expected_n or df.count()
         m, k = _bloom_params(max(n // (1 << shard_bits), 1), fpr)
     nbytes = (m + 7) // 8
+    # only non-empty shards get written below: a stale shard file from an
+    # earlier build (or a crash-orphaned increment scratch dir, which a
+    # later wave would OR-merge) must not survive into this filter
+    shutil.rmtree(f"{shard_dir.rstrip(os.sep)}.increment", ignore_errors=True)
     os.makedirs(shard_dir, exist_ok=True)
+    for name in os.listdir(shard_dir):
+        if name.startswith("shard_") and name.endswith(".bin"):
+            os.remove(os.path.join(shard_dir, name))
     ptmp = os.path.join(shard_dir, ".params.json.tmp")
     with open(ptmp, "w") as f:
         json.dump({"shard_bits": shard_bits, "m": m, "k": k}, f)

@@ -135,9 +135,12 @@ def latest_scores(
     """J4 feed straight from the history: newest (applied_wave,
     label_version) primary label per article.  Same output columns as
     ``plans.report.latest_labels`` (article_id, primary_label,
-    confidence)."""
+    confidence).  Two runs at the same wave tie on every other key
+    (applied_at is the pinned clock), so the greatest ``model_version``
+    wins, and ``label`` makes the order total."""
     w = Window.partitionBy("article_id").orderBy(
-        F.desc("applied_wave"), F.desc("label_version"), F.desc("applied_at")
+        F.desc("applied_wave"), F.desc("label_version"), F.desc("applied_at"),
+        F.desc("model_version"), F.asc("label"),
     )
     return (
         scores.where(

@@ -29,10 +29,11 @@ from mizzounewscrawler_spark.functions.text import (
     stopword_ratio_expr,
     token_count_expr,
 )
+from mizzounewscrawler_spark.lake import read_parquet
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _dec(col, scale: int = 2):
@@ -2848,7 +2849,7 @@ def q_doc_fingerprints(spark, sf):
     ).select("doc_id", F.xxhash64("s").alias("h"))
     path = _write_fixture(postings.toPandas(), "fp_postings")
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy("doc_id")
         .agg(F.min("h").alias("fingerprint"))
     )
@@ -2874,7 +2875,7 @@ def q_compression_quality(spark, sf):
         "doc_id", compression_ratio_col(F.col("text")).alias("ratio")
     )
     path = _write_fixture(ratios.toPandas(), "zlib_ratios")
-    fx = spark.read.parquet(path).where(F.col("ratio").isNotNull())
+    fx = read_parquet(spark, path).where(F.col("ratio").isNotNull())
     band = (
         F.when(F.col("ratio") < 0.35, "repetitive")
         .when(F.col("ratio") <= 0.8, "normal")
@@ -3104,7 +3105,7 @@ def q_ivf_ann(spark, sf):
     path = _write_fixture(
         cand.toPandas().sort_values("vec_id"), "ivf_candidates"
     )
-    cand_ids = spark.read.parquet(path)
+    cand_ids = read_parquet(spark, path)
     return cosine_topk(emb.join(cand_ids, "vec_id"), qvec, k=10)
 
 
@@ -3137,7 +3138,7 @@ def q_embedding_neardup_lsh(spark, sf):
     path = _write_fixture(
         cand.toPandas().sort_values(["id_a", "id_b"]), "emb_lsh_pairs"
     )
-    pairs = spark.read.parquet(path)
+    pairs = read_parquet(spark, path)
     base = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -3218,7 +3219,7 @@ def q_minhash_neardup(spark, sf):
         "doc_id", minhash_signature_expr(F.col("text"), 16, 3).alias("sig")
     ).where(~F.array_contains(F.transform("sig", lambda x: x.isNull()), True))
     path = _write_fixture(sigs.toPandas(), "minhash_sigs")
-    s = spark.read.parquet(path)
+    s = read_parquet(spark, path)
     band_ids = F.sequence(F.lit(0), F.lit(3))
     banded = s.select(
         "doc_id",
@@ -3285,7 +3286,7 @@ def q_incremental_neardup(spark, sf):
         "doc_id", minhash_signature_expr(F.col("text"), 16, 3).alias("sig")
     ).where(~F.array_contains(F.transform("sig", lambda x: x.isNull()), True))
     path = _write_fixture(sigs.toPandas(), "incr_minhash_sigs")
-    s = spark.read.parquet(path)
+    s = read_parquet(spark, path)
     index = minhash_band_postings(
         s.where(F.col("doc_id") % 5 != 0), "doc_id", sig_col="sig",
         num_hashes=16, bands=4, hashed_buckets=False,
@@ -3322,7 +3323,7 @@ def q_simhash_neardup(spark, sf):
         F.col("sh").isNotNull()
     )
     path = _write_fixture(sh.toPandas(), "simhash_sigs")
-    s = spark.read.parquet(path)
+    s = read_parquet(spark, path)
     blocks = s.select(
         "doc_id",
         "sh",
@@ -3396,7 +3397,7 @@ def q_lsh_ann(spark, sf):
     path = _write_fixture(
         cand.toPandas().sort_values("vec_id"), "lsh_ann_candidates"
     )
-    cand_ids = spark.read.parquet(path)
+    cand_ids = read_parquet(spark, path)
     return cosine_topk(emb.join(cand_ids, "vec_id"), qvec, k=10)
 
 
@@ -3449,7 +3450,7 @@ def q_extractor_method_stats(spark, sf):
     pdf = out.select("url", "method", "fetch_status", "found").toPandas()
     path = _write_fixture(pdf.sort_values("url"), "wave_results")
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .where(F.col("found"))
         .groupBy("method", "fetch_status")
         .agg(F.count("*").alias("n"))

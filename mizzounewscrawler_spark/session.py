@@ -21,6 +21,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """``$SPARK_DRIVER_MEM`` if set, else 64 GB capped at a quarter of
+    physical RAM (the JVM's own default heap share): a 64 GB heap on a
+    16 GB machine lets the heap grow until the kernel kills the JVM."""
+    explicit = os.environ.get("SPARK_DRIVER_MEM")
+    if explicit:
+        return explicit
+    try:
+        phys_mb = (
+            os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        )
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return "64g"
+    return f"{max(1024, min(64 << 10, phys_mb // 4))}m"
+
+
 def build_session(
     parallelism: int | None = None,
     shuffle_partitions: int | None = None,
@@ -74,7 +90,7 @@ def build_session(
         # heap spills the cache to disk and GC-thrashes at high parallelism
         # (the r1 scaling-efficiency killer).  NB: only the FIRST session in
         # a Python process sets this — the JVM outlives spark.stop().
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")

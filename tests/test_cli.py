@@ -25,12 +25,25 @@ def lake(spark):
     shutil.rmtree(out, ignore_errors=True)
 
 
-def test_cli_status(lake, capsys):
-    assert cli.main(["status", "--out", f"{lake}/crawl"]) == 0
+def test_cli_status(lake, spark, capsys):
+    assert cli.main(["status", "--out", f"{lake}/crawl", "--top", "3"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert "articles" in out["tables"]
     assert sum(out["status_counts"].values()) > 0
-    assert out["top_hosts"]
+    # the one (host, status) aggregation folds to the per-status counts
+    # and the (n desc, host asc) top hosts of separate aggregations
+    from pyspark.sql import functions as F
+
+    from mizzounewscrawler_spark.crawl import open_tables
+
+    arts = open_tables(spark, f"{lake}/crawl").articles.read()
+    per_status = arts.groupBy("status").agg(F.count(F.lit(1)).alias("n"))
+    per_host = arts.groupBy("host").agg(F.count(F.lit(1)).alias("n"))
+    assert out["status_counts"] == {r["status"]: r["n"] for r in per_status.collect()}
+    assert out["top_hosts"] == [
+        [r["host"], r["n"]]
+        for r in per_host.orderBy(F.desc("n"), "host").limit(3).collect()
+    ]
 
 
 def test_cli_verify_urls(lake, spark, capsys):

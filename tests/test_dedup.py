@@ -889,3 +889,65 @@ def test_crawl_disk_bloom_bulk_increment_branch(spark, web_spark):
         )
     assert results[0] == results[2_000_000]
     assert len(results[0]) > 10
+
+
+def test_disk_bloom_writer_requires_sharded_bloom(spark, web_spark):
+    """bloom_disk_writer is refused, not silently ignored, without
+    bloom_sharded or with the cuckoo filter (explicit-config contract)."""
+    import os
+    import tempfile
+
+    import pytest as _pytest
+
+    from mizzounewscrawler_spark.crawl import CrawlConfig, run_crawl
+
+    pages, seeds, robots = web_spark
+    for cfg in (
+        CrawlConfig(max_waves=1, bloom_disk_writer=True),
+        CrawlConfig(
+            max_waves=1, bloom_disk_writer=True, bloom_sharded=True,
+            url_seen_filter="cuckoo",
+        ),
+    ):
+        out = tempfile.mkdtemp(prefix="crawl_diskbloom_refused_")
+        with _pytest.raises(ValueError, match="bloom_disk_writer"):
+            run_crawl(spark, pages, seeds, robots, out, cfg)
+        assert not os.listdir(out)  # refused before anything was written
+
+
+def test_build_bloom_to_dir_clears_stale_shards(spark, tmp_path):
+    """A rebuild over a dirty directory — shard files the new input does
+    not touch, and a crash-orphaned increment scratch dir — is
+    bit-identical to the in-RAM writer."""
+    import numpy as np
+    import pandas as pd
+
+    from mizzounewscrawler_spark.operators.dedup import (
+        _bloom_params,
+        build_bloom,
+        build_bloom_to_dir,
+    )
+
+    rng = np.random.default_rng(11)
+    h = rng.integers(-(2**63), 2**63 - 1, size=4000, dtype=np.int64)
+    # keep shards 0 and 1 of 8 only (top 3 bits), so shards 2..7 are empty
+    h = h[(h.view(np.uint64) >> np.uint64(61)) < 2]
+    params = _bloom_params(1000, 0.01)
+    shard_dir = tmp_path / "bloom_shards"
+    shard_dir.mkdir()
+    for sid in range(8):
+        (shard_dir / f"shard_{sid:05d}.bin").write_bytes(b"\xff" * 64)
+    scratch = tmp_path / "bloom_shards.increment"
+    scratch.mkdir()
+    (scratch / "shard_00003.bin").write_bytes(b"\xff" * 64)
+
+    df = spark.createDataFrame(pd.DataFrame({"url_hash": h}))
+    build_bloom_to_dir(df, str(shard_dir), params=params, shard_bits=3)
+    ram = build_bloom(df, "url_hash", shard_bits=3, params=params)
+    on_disk = {
+        int(p.name[len("shard_"):-len(".bin")]): p.read_bytes()
+        for p in shard_dir.glob("shard_*.bin")
+    }
+    assert set(ram.shards) == {0, 1}
+    assert on_disk == {sid: bytes(bm) for sid, bm in ram.shards.items()}
+    assert not scratch.exists()

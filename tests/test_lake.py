@@ -8,6 +8,7 @@ compact() clears the delete set without changing the visible rows.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -344,3 +345,125 @@ def test_rollback_and_rollback_exclude_restore_views(spark, tmp_path):
     assert all(s.version >= orphan2.version for s in snaps)
     t.rollback_exclude([orphan2.version], {"wave": 1})
     assert sorted(r["x"] for r in t.read().collect()) == [1, 2, 3]
+
+
+def _jobs_launched(spark, fn):
+    """``(fn(), Spark jobs it launched)``, counted by job group in the
+    status tracker.  The tracker fills from the asynchronous listener bus,
+    so a sentinel job in a second group is awaited first: once it is
+    visible, every job launched before it is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "jobs launched by a read")
+        result = fn()
+        sc.setJobGroup(f"{group}-sentinel", "listener-bus sentinel")
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-sentinel"):
+        assert time.time() < deadline, "sentinel job never reached the tracker"
+        time.sleep(0.05)
+    return result, len(tracker.getJobIdsForGroup(group))
+
+
+def _untyped(schema):
+    """(name, type) pairs, nullability ignored: Spark reads every parquet
+    column back as nullable."""
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
+def test_manifest_schema_plans_crawl_reads(spark, web_spark, tmp_path):
+    """Reads are planned from the manifest: after a 2-wave crawl with
+    bin-pack compaction and frontier deletes, every snapshot's recorded
+    schema equals the schema Spark infers from ALL its data files (merged,
+    not one file's footer), delete-key files have the key column's type,
+    and opening a table — deletes included — launches no Spark job."""
+    from pyspark.sql import types as T
+
+    from mizzounewscrawler_spark.crawl import CrawlConfig, open_tables, run_crawl
+
+    pages, seeds, robots = web_spark
+    out = str(tmp_path / "crawl")
+    run_crawl(
+        spark, pages, seeds, robots, out,
+        CrawlConfig(max_waves=2, bloom_capacity=10000, compact_max_live=1),
+    )
+    t = open_tables(spark, out)
+    tables = [tbl for tbl in vars(t).values() if tbl.exists()]
+    assert {"frontier", "url_seen", "articles", "host_state"} <= {
+        os.path.basename(tbl.path) for tbl in tables
+    }
+    binpacked = with_deletes = 0
+    for tbl in tables:
+        for snap in tbl.snapshots():
+            binpacked += snap.summary.get("compaction") == "binpack"
+            if not snap.live_versions:
+                continue
+            schema = T.StructType.fromJson(json.loads(snap.schema_json))
+            inferred = spark.read.option("mergeSchema", "true").parquet(
+                *[tbl._data_dir(v) for v in snap.live_versions]
+            ).schema
+            assert _untyped(schema) == _untyped(inferred), (tbl.path, snap.version)
+            if snap.delete_versions:
+                with_deletes += 1
+                dk = spark.read.option("mergeSchema", "true").parquet(
+                    *[tbl._delete_dir(v) for v in snap.delete_versions]
+                ).schema
+                assert _untyped(dk) == _untyped(
+                    T.StructType([schema[snap.delete_key_col]])
+                ), (tbl.path, snap.version)
+                _, jobs = _jobs_launched(spark, lambda: tbl.read(snap.version))
+                assert jobs == 0, (tbl.path, snap.version)
+    assert binpacked and with_deletes
+    for tbl in tables:
+        assert _jobs_launched(spark, tbl.read)[1] == 0, tbl.path
+    # the planned read returns the rows an inferred read does
+    fr = t.frontier.current_snapshot()
+    plain = spark.read.parquet(
+        *[t.frontier._data_dir(v) for v in fr.live_versions]
+    )
+    if fr.delete_versions:
+        deletes = [t.frontier._delete_dir(v) for v in fr.delete_versions]
+        plain = plain.join(spark.read.parquet(*deletes), "url_hash", "left_anti")
+    assert sorted(map(tuple, t.frontier.read().collect())) == sorted(
+        map(tuple, plain.collect())
+    )
+
+
+def test_read_parquet_memo_zero_jobs_and_invalidation(spark, tmp_path):
+    """A repeat catalog read of an unchanged path launches no job; a path
+    rewritten with a new schema is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mizzounewscrawler_spark.plans.relational import t as catalog_read
+
+    path = tmp_path / "docs.parquet"
+    pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a", "b"]}), path)
+    first, jobs = _jobs_launched(
+        spark, lambda: catalog_read(spark, str(tmp_path), "docs")
+    )
+    assert jobs >= 1  # inference is observable, so the 0 below is not vacuous
+    again, jobs = _jobs_launched(
+        spark, lambda: catalog_read(spark, str(tmp_path), "docs")
+    )
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert sorted(map(tuple, again.collect())) == [(1, "a"), (2, "b")]
+
+    tmp = tmp_path / "docs.parquet.tmp"
+    pq.write_table(
+        pa.table({"doc_id": [3], "title_of_the_document": ["c"], "n": [1.5]}),
+        tmp,
+    )
+    os.replace(tmp, path)
+    after = catalog_read(spark, str(tmp_path), "docs")
+    assert after.columns == ["doc_id", "title_of_the_document", "n"]
+    assert [tuple(r) for r in after.collect()] == [(3, "c", 1.5)]

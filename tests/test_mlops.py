@@ -219,3 +219,42 @@ def test_cli_ml_and_drift_verbs(spark, crawl_out, capsys):
     # the ml verb is job-audited
     jr = open_job_runs(spark, crawl_out).read()
     assert jr.where(F.col("job_type") == "ml").count() >= 2
+
+
+def test_latest_scores_breaks_full_ties_deterministically(spark):
+    """Two `ml` runs at the same wave tie on applied_wave, label_version
+    and the pinned applied_at: the greatest model_version wins, whatever
+    the row order or partitioning of the history."""
+    from mizzounewscrawler_spark.functions.dates import REFERENCE_TS
+    from mizzounewscrawler_spark.plans.mlops import MODEL_SCORES_DDL
+
+    rows = [
+        (aid, mv, "classifier", label, 0.9, 0.9, 1, 1, 0, REFERENCE_TS, None)
+        for aid in range(6)
+        for mv, label in (("cin-a", "sports"), ("cin-b", "politics"))
+    ]
+    want = [(aid, "politics", 0.9) for aid in range(6)]
+    for order in (rows, rows[::-1]):
+        for parts in (1, 4):
+            hist = spark.createDataFrame(order, MODEL_SCORES_DDL).repartition(parts)
+            got = sorted(map(tuple, latest_scores(hist).collect()))
+            assert got == want, (parts, order is rows)
+
+
+def test_cli_ml_label_version_without_model_version(spark, crawl_out, capsys):
+    """--label-version stamps the rows on its own, and the snapshot
+    records the classifier's MODEL_VERSION when --model-version is unset."""
+    from mizzounewscrawler_spark.cli import main
+    from mizzounewscrawler_spark.operators.ml import MODEL_VERSION
+
+    assert main(
+        ["ml", "--out", crawl_out, "--label-version", "7", "--wave", "9"]
+    ) == 0
+    capsys.readouterr()
+    ms = open_model_scores(spark, crawl_out)
+    stamped = {
+        (r["model_version"], r["label_version"])
+        for r in ms.read().where(F.col("applied_wave") == 9).collect()
+    }
+    assert stamped == {(MODEL_VERSION, 7)}
+    assert ms.current_snapshot().summary["model_version"] == MODEL_VERSION
