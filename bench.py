@@ -178,7 +178,6 @@ def bench_crawl(spark, n_hosts: int, pages: int, waves: int) -> dict:
         max_per_host=int(os.environ.get("BENCH_CAP", "3")),
         wave_duration=float(os.environ.get("BENCH_WAVE_DUR", "60")),
         bucket_sweep=sweep,
-        stage_heavy_first=os.environ.get("BENCH_HEAVY_FIRST", "0") == "1",
     )
     # BENCH_SEED_FRONTIER=all → start from the full known-URL frontier (the
     # north rule's Common-Crawl regime: a 10^10-URL seed list, politeness-

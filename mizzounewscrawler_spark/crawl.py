@@ -18,6 +18,11 @@ job killed mid-wave re-runs only that wave's deterministic plan — no URL is
 re-fetched and none is re-seen (north-rule resume requirement; tested in
 tests/test_resume.py).
 
+The wave materializes its fetch results once: fetch+extract+status runs
+as one eager local checkpoint, and every consumer (articles, host_state,
+discovery → URL-seen dedup → url_seen/frontier, fetch events) plans from
+that checkpoint's rows instead of re-planning the wave's whole lineage.
+
 All ordering is deterministic: (priority DESC, url_hash ASC) replaces the
 reference's ``ORDER BY RANDOM()`` (extraction.py:1141), and the virtual wave
 clock (wave_ts = wave_idx × wave_duration) replaces wall-clock sleeps — so
@@ -211,16 +216,6 @@ class CrawlConfig:
     # full articles table (invariant pinned in tests/test_dedup.py).  Off
     # by default: two extra wave-sized jobs per wave.
     neardup_minhash: bool = False
-    # Cache-fill discipline for the tier-A staging pool: when True, the
-    # articles write (the one consumer guaranteed to scan every `results`
-    # row) runs ALONE first, filling the extraction cache, and the small
-    # consumers (host_state / order_log / fetch_events / flagged count) are
-    # submitted afterwards against the hot cache.  When False (default) all
-    # tier-A jobs race the uncached pipeline — maximum driver-latency
-    # overlap, but on a task-slot-saturated executor set the racing tasks
-    # block on cache-fill locks while holding slots.  Measured A/B lives in
-    # BENCH/BASELINE.md; the default follows the measurement.
-    stage_heavy_first: bool = False
     # Crawler-trap guard (F4 producer wired into admission): when > 0, a
     # (host, path-template) whose ALL-TIME admitted URLs (persisted
     # incrementally in the trap_counts lake table — never a frontier
@@ -567,6 +562,24 @@ def _read_at_wave(table: LakeTable, wave: int) -> DataFrame | None:
     return table.read(best.version) if best is not None else None
 
 
+def _local_checkpoint(df: DataFrame, held: list) -> DataFrame:
+    """Materialize ``df`` now and return a DataFrame over those rows: the
+    returned plan is a single ``LogicalRDD`` leaf, so its consumers never
+    re-analyze, re-optimize or re-plan ``df``'s lineage.  The checkpoint's
+    RDD goes on ``held`` — ``DataFrame.unpersist`` does not free a local
+    checkpoint, :func:`_release` does."""
+    ck = df.localCheckpoint(eager=True)
+    held.append(ck._jdf.queryExecution().analyzed().rdd().toJavaRDD())
+    return ck
+
+
+def _release(held: list) -> None:
+    """Unpersist every cache, broadcast and checkpoint RDD on ``held``."""
+    for c in held:
+        c.unpersist()
+    held.clear()
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -588,6 +601,13 @@ def run_crawl(
     dataset scoping when ``config.dataset_label`` is set — the seed set is
     semi-joined to the dataset's members up front, which scopes every
     downstream stage (frontier, host dims, waves, admission) for free.
+
+    Fault model: each wave's fetch results live only as a local checkpoint
+    (executor blocks, no lineage to recompute them from).  A lost block
+    fails the wave with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``; calling
+    ``run_crawl`` again resumes from the last frontier checkpoint, exactly
+    as after a killed driver.  Every cache, broadcast and checkpoint the
+    call makes is released when it returns or raises.
     """
     cfg = config or CrawlConfig()
     if cfg.bloom_disk_writer and (
@@ -636,7 +656,35 @@ def run_crawl(
         allowed_hosts.join(robots_star.select("host", "disallow"), "host", "left")
         .cache()
     )
+    held: list = []  # the running wave's caches, broadcasts and checkpoint
+    try:
+        return _crawl(
+            spark, t, cfg, pages, seeds, robots, out_dir, initial_frontier,
+            allowed_hosts, host_dim, host_rules, held,
+        )
+    finally:
+        _release(held)
+        host_dim.unpersist()
+        host_rules.unpersist()
 
+
+def _crawl(
+    spark: SparkSession,
+    t: CrawlTables,
+    cfg: CrawlConfig,
+    pages: DataFrame,
+    seeds: DataFrame,
+    robots: DataFrame,
+    out_dir: str,
+    initial_frontier: DataFrame | None,
+    allowed_hosts: DataFrame,
+    host_dim: DataFrame,
+    host_rules: DataFrame,
+    held: list,
+) -> dict:
+    """:func:`run_crawl` after its host dimensions are built: resume or
+    seed, then the wave loop.  Whatever a wave caches, broadcasts or
+    checkpoints goes on ``held``, released at the wave's end."""
     if t.frontier.exists():
         # resume from the newest WAVE-BEARING snapshot: maintenance commits
         # (requeue readmission, out-of-band compaction without a copied
@@ -765,9 +813,12 @@ def run_crawl(
                 .cache()
             )
             seen = cand.select("url_hash", "url_surt")
+            held.append(cand)
         else:
             frontier = seed_frontier(spark, seeds).cache()
             seen = frontier.select("url_hash", "url_surt")
+        # the seed frontier's cache feeds wave 0 and is released with it
+        held.append(frontier)
         frontier_size = frontier.count()
         t.url_seen.append(seen, {"wave": -1})
         t.frontier.overwrite(
@@ -830,14 +881,12 @@ def run_crawl(
 
     stats: dict = {"start_wave": start_wave, "waves_run": 0}
     for wave in range(start_wave, cfg.max_waves):
-        wave_t0 = time.time()
-        wave_ts = wave * cfg.wave_duration
-        frontier = frontier.cache()
-        wave_caches: list = [frontier]
         # frontier_size tracked arithmetically (prev − scheduled + admitted)
         # so the loop never pays a count() job over the whole frontier
         if frontier_size == 0:
             break
+        wave_t0 = time.time()
+        wave_ts = wave * cfg.wave_duration
 
         # bucket sweep: restrict this wave's eligibility (and the page scan)
         # to the wave's hash bucket — see CrawlConfig.bucket_sweep
@@ -861,6 +910,9 @@ def run_crawl(
                 adaptive_nsalts,
             )
 
+            # the host histogram and the wave build both scan the frontier
+            eligible = eligible.cache()
+            held.append(eligible)
             nsalts = adaptive_nsalts(
                 eligible, rows_per_task=cfg.salt_rows_per_task
             )
@@ -877,20 +929,27 @@ def run_crawl(
             recrawl_sources=cfg.recrawl_sources,
             salt_partitions=nsalts,
         ).cache()
-        wave_caches.append(wave_df)
+        held.append(wave_df)
 
         proxy_rows = list(cfg.proxy_patterns) if cfg.proxy_patterns else None
-        results = with_status(
-            fetch_and_extract(
-                wave_df,
-                pages_wave,
-                keep_html_hosts=(
-                    frozenset(h for h, _ in proxy_rows) if proxy_rows else None
-                ),
-                use_trafilatura=cfg.use_trafilatura,
-            )
-        ).cache()
-        wave_caches.append(results)
+        # The wave's one extraction job: every consumer below plans from
+        # the checkpointed rows, never from the fetch+extract lineage.
+        t_fetch = time.time()
+        results = _local_checkpoint(
+            with_status(
+                fetch_and_extract(
+                    wave_df,
+                    pages_wave,
+                    keep_html_hosts=(
+                        frozenset(h for h, _ in proxy_rows)
+                        if proxy_rows else None
+                    ),
+                    use_trafilatura=cfg.use_trafilatura,
+                )
+            ),
+            held,
+        )
+        sec_fetch = time.time() - t_fetch
         ok_expr = F.col("fetch_status").isin("extracted", "wire", "paywall", "feed")
         is_src = is_source_url_expr(F.col("url_surt"))
 
@@ -905,26 +964,20 @@ def run_crawl(
                 else bloom_flag_sharded
             )
             flagged = _flag_sharded(
-                cand, shard_dir, "url_hash", caches=wave_caches
+                cand, shard_dir, "url_hash", caches=held
             )
         else:
-            flagged = bloom_flag(cand, bloom, "url_hash", caches=wave_caches)
+            flagged = bloom_flag(cand, bloom, "url_hash", caches=held)
 
         # NO dedicated counters action: the pre-commit counters ride as
-        # observe() metrics on writes the wave runs anyway, and staging is
-        # split into two overlapped pools (per-wave fixed driver latency —
-        # serial action chains that do not shrink with cluster size — is
-        # what failed the r2 scaling gate):
-        #   pool A: articles (carries the results metrics), order_log,
-        #           host_state, plus a flagged count (carries the Bloom-
-        #           positive metric) — extraction compute, cache fills and
-        #           write I/O all overlap;
-        #   pool B: url_seen + frontier (need n_possible from pool A to
-        #           pick the dedup join strategy).
-        # Each observe() node sits ABOVE its cache and is attached only to
-        # the one consumer guaranteed to scan every row (the articles
-        # write / the flagged count): a metrics node below the cache could
-        # report partial rows to a concurrent reader racing the cache fill.
+        # observe() metrics on work the wave runs anyway (per-wave fixed
+        # driver latency — serial action chains that do not shrink with
+        # cluster size — is what failed the r2 scaling gate): the articles
+        # write carries the results metrics and the flagged count the
+        # Bloom-positive metric, each the one consumer guaranteed to scan
+        # every row.  The flagged metric sits ABOVE the flagged cache: a
+        # metrics node below it could report partial rows to a concurrent
+        # reader racing the cache fill.
         obs_r = Observation()
         obs_f = Observation()
 
@@ -992,7 +1045,8 @@ def run_crawl(
         flagged_obs = flagged.observe(
             obs_f, F.sum(F.col("_maybe_seen").cast("long")).alias("n")
         )
-        sec_plan = round(time.time() - wave_t0, 3)
+        # driver plan construction only: the extraction job is excluded
+        sec_plan = round(time.time() - wave_t0 - sec_fetch, 3)
 
         # All per-wave table writes are independent of each other — only the
         # MANIFEST order matters (frontier last = the checkpoint).  Staging
@@ -1005,28 +1059,24 @@ def run_crawl(
         # turns out empty (no commit; next wave's stage() reuses and
         # overwrites the same version).
         #
-        # ONE pool, two dependency tiers: the url_seen/frontier stages need
-        # only the flagged count (n_possible picks the dedup join strategy)
-        # — NOT the articles/host_state/order writes, whose results gate
-        # only the commits.  Submitting tier B the moment fut_flag resolves
-        # overlaps the dedup writes with the (dominant) articles write
+        # ONE pool, two dependency tiers.  Tier A — articles, fetch events,
+        # order_log, host_state and the flagged count — reads only the
+        # checkpointed results and the wave cache, both materialized before
+        # the pool starts, so its jobs share no cache fill.  Tier B — the
+        # url_seen/frontier stages — needs the flagged count: n_possible
+        # picks the dedup join strategy, and the count fills the flagged
+        # cache tier B reads.  Submitting tier B the moment fut_flag
+        # resolves overlaps the dedup writes with the articles write
         # instead of serializing the two tiers behind a pool barrier.
         #
-        # MEASURED DEAD END (r4, do not re-attempt): submitting tier B
-        # CONCURRENTLY with tier A (using the previous wave's n_possible as
-        # the join-strategy hint) made overlapped waves 2–3× SLOWER at
-        # local[32] — seven jobs racing the still-uncached heavy pipeline
-        # leave many task slots blocked on cache-fill block locks, starving
-        # real compute.  Tier B after the flagged count (caches hot) costs
-        # only ~2 s serial at the wide level; the race costs ~20 s.
+        # MEASURED DEAD END (r4): submitting tier B CONCURRENTLY with tier A
+        # (the previous wave's n_possible as the join-strategy hint) made
+        # waves 2–3× slower at local[32], when tier-A jobs still raced the
+        # uncached extraction pipeline and blocked task slots on cache-fill
+        # locks.  The checkpoint removed that race; whether tier B now
+        # gains from the overlap is unmeasured.
         with ThreadPoolExecutor(max_workers=7) as pool:
             fut_articles = pool.submit(t.articles.stage, articles_batch)
-            staged_articles_early = None
-            if cfg.stage_heavy_first:
-                # fill the results cache with the one full-scan consumer
-                # before the small consumers race it (see CrawlConfig)
-                staged_articles_early = fut_articles.result()
-                fut_articles = None
             fut_events = None
             if cfg.with_fetch_events:
                 from mizzounewscrawler_spark.plans.telemetry import (
@@ -1063,7 +1113,7 @@ def run_crawl(
             # tier-B dedup/frontier staging entirely — its staged output
             # would be discarded at the scheduled==0 check below, so staging
             # it is pure wasted per-wave driver latency.  wave_df.isEmpty()
-            # is cheap here: the flagged count above already materialized
+            # is cheap here: the extraction checkpoint already materialized
             # the wave cache, and it only runs when n_cand == 0.
             idle_wave = n_cand == 0 and wave_df.isEmpty()
             fut_seen = fut_frontier = None
@@ -1090,15 +1140,11 @@ def run_crawl(
                     # rescan.
                     nfr = _apply_trap_guard(t, nfr, cfg.trap_guard_max)
                 new_frontier_rows = nfr.cache()
-                wave_caches.append(new_frontier_rows)
+                held.append(new_frontier_rows)
                 fut_seen, fut_frontier = _stage_dedup(
                     pool, t, new_frontier_rows, tombstones, small_n
                 )
-            staged_articles = (
-                staged_articles_early
-                if staged_articles_early is not None
-                else fut_articles.result()
-            )
+            staged_articles = fut_articles.result()
             staged_order = fut_order.result() if fut_order is not None else None
             staged_host = fut_host.result()
             staged_events = fut_events.result() if fut_events is not None else None
@@ -1111,15 +1157,15 @@ def run_crawl(
         scheduled = int(r_metrics["n"] or 0)
         fetched_ok = int(r_metrics["ok"] or 0)
         src_scheduled = int(r_metrics["src"] or 0)
-        # lineage split: sec_extract = until the flagged count (metrics
-        # available); sec_commit = the rest of the overlapped staging
+        # lineage split: sec_extract = wave start until the flagged count
+        # (plan, extraction job, discovery and flag); sec_commit = the rest
+        # of the overlapped staging
         sec_extract = sec_flag
         sec_commit = round(time.time() - wave_t0 - sec_extract, 3)
         if scheduled == 0:
             # every pending host is in backoff this wave — advance the
             # virtual clock and retry (bounded by max_waves)
-            for c in wave_caches:
-                c.unpersist()
+            _release(held)
             frontier = t.frontier.read().where(F.col("status") == "discovered")
             continue
 
@@ -1196,11 +1242,8 @@ def run_crawl(
             # index (never rescanning prior text), then append the wave's
             # postings.  ORDER MATTERS: pairs must materialize against the
             # index as-of the previous wave before the postings append.
-            # docs comes from the COMMITTED articles table, not `results`:
-            # the wave pipeline's logical plan is enormous, and stacking
-            # the 32-hash MinHash transform on top of it sends Catalyst
-            # optimization time through the roof — the parquet re-read is
-            # wave-sized and gives the signature jobs a flat scan plan.
+            # docs comes from the COMMITTED articles table (a wave-sized
+            # parquet re-read with a flat scan plan for the signature jobs).
             docs = (
                 t.articles.read()
                 .where(
@@ -1212,7 +1255,7 @@ def run_crawl(
                 .select(F.col("url_hash").alias("id"), "text")
             )
             postings = minhash_band_postings(docs, "id", "text").cache()
-            wave_caches.append(postings)
+            held.append(postings)
             pairs = band_self_pairs(postings)
             if t.neardup_postings.exists():
                 cross = probe_band_index(
@@ -1340,10 +1383,12 @@ def run_crawl(
             "next_frontier": next_size,
             "wave_sec": round(time.time() - wave_t0, 3),
             # per-phase lineage: where this wave's time went
-            "sec_extract": sec_extract,  # fetch+extract+discover+bloom flag
+            "sec_extract": sec_extract,  # wave start → flagged count:
+            #                              plan, extraction job, discovery
+            #                              and bloom flag
             "sec_plan": sec_plan,        # ⊂ sec_extract: driver-side plan
-            #                              construction before the one
-            #                              counters action (pure fixed cost)
+            #                              construction only, the extraction
+            #                              job excluded (pure fixed cost)
             "sec_commit": sec_commit,    # concurrent staged table writes
             "sec_bloom": sec_bloom,      # bloom increment build + merge
         }
@@ -1363,8 +1408,5 @@ def run_crawl(
         frontier = t.frontier.read().where(F.col("status") == "discovered")
         stats = {**stats, **summary, "waves_run": stats["waves_run"] + 1,
                  "snapshot": snap.version}
-        for c in wave_caches:  # release wave caches (perpetual-crawl hygiene)
-            c.unpersist()
-    host_dim.unpersist()
-    host_rules.unpersist()
+        _release(held)  # perpetual-crawl hygiene
     return stats

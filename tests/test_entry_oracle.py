@@ -84,3 +84,19 @@ def test_rows_only_queries_run(spark):
             continue
         n = qs[name](spark, SF_DIR).count()
         assert n >= 0, name
+
+
+def test_queries_follow_catalog_declaration_order():
+    """``queries()`` lists every catalog entry once, in the order the
+    ``QuerySpec`` entries are declared in ``plans/relational.py`` — no
+    reordering of the catalog after its declaration."""
+    import re
+
+    from mizzounewscrawler_spark.plans import relational
+
+    with open(relational.__file__, encoding="utf-8") as fh:
+        declared = re.findall(r'QuerySpec\(\s*"(\w+)"', fh.read())
+    keys = list(entrymod.queries())
+    assert len(declared) == len(set(declared))
+    assert keys == [s.name for s in relational.CATALOG]
+    assert keys == declared
